@@ -1095,12 +1095,12 @@ object TextQueries {
         .select(lit("stage").as("kind"), lit(name).as("key"),
           col("nn").cast(LongType).as("n"))
     val tokensRow = qd
-      .agg(sum(col("n_kept")).as("dk"))
+      .agg(coalesce(sum(col("n_kept")), lit(0L)).as("dk"))
       .select(lit("stage").as("kind"), lit("e_tokens_kept").as("key"),
         col("dk").cast(LongType).as("n"))
     // a_quality = |qa| = Σ dup-group sizes over the survivors;
     // c_scrub = |qc| (the scrub join is 1:1 — scrubbed ⊆ qb by key)
-    stage(qb, "a_quality", sum(col("grp_n")))
+    stage(qb, "a_quality", coalesce(sum(col("grp_n")), lit(0L)))
       .unionByName(stage(qb, "b_dedup"))
       .unionByName(stage(scrubbed, "c_scrub"))
       .unionByName(stage(qd, "d_lm"))

@@ -15,7 +15,9 @@ import org.scalatest.BeforeAndAfterAll
   *  - d12 leakage-safety invariant: every duplicate cluster maps to
   *    exactly ONE split (the whole point of splitting by cluster id),
   *    all documents are assigned, and all three splits are non-empty
-  *    at sf0.01.
+  *    at sf0.01;
+  *  - t19's stage funnel reports 0, not NULL, for its sum stages on an
+  *    empty corpus.
   */
 class RankFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -97,5 +99,20 @@ class RankFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bySplit.getOrElse(s, 0) > 0, s"split $s empty"))
     // multi-doc clusters exist at sf0.01, so the invariant is exercised
     assert(rows.groupBy(_._2).exists(_._2.length > 1))
+  }
+
+  test("t19 funnel on an empty corpus: every stage row is 0, like the " +
+      "count stages, and no pack chunks") {
+    import org.apache.spark.sql.types._
+    val empty = java.nio.file.Files.createTempDirectory("t19-empty").toString
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("lang", StringType), StructField("source", StringType),
+        StructField("n_chars", LongType))))
+      .write.parquet(s"$empty/documents.parquet")
+    val rows = q("t19_pretrain_pipeline")(spark, empty).collect()
+      .map(r => (r.getString(0), r.getString(1), r.get(2))).toSeq
+    assert(rows == Seq("a_quality", "b_dedup", "c_scrub", "d_lm", "e_tokens_kept")
+      .map(k => ("stage", k, 0L)))
   }
 }

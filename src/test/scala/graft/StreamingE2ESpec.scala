@@ -76,7 +76,22 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("state survives a query restart from checkpoint") {
+  /** Session settings that serve `file:` with stock Hadoop's classes
+    * instead of the engine's `graft.io` ones (uncached, so the engine
+    * FileSystem already cached for `file:` is not reused). A session's
+    * Hadoop conf takes its keys verbatim, so they carry no
+    * `spark.hadoop.` prefix. */
+  private val stockLocalFs = Map(
+    "fs.file.impl" -> "org.apache.hadoop.fs.LocalFileSystem",
+    "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs",
+    "fs.file.impl.disable.cache" -> "true")
+
+  // the first run writes its checkpoint on the engine's file system, or
+  // on stock Hadoop's (a checkpoint from before the engine had its
+  // own); the restart always reads it on the engine's
+  for ((suffix, firstRun) <- Seq("" -> Map.empty[String, String],
+      ", first run on stock Hadoop's file system" -> stockLocalFs))
+  test("state survives a query restart from checkpoint" + suffix) {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("gate-ckpt").toString
@@ -89,12 +104,25 @@ class StreamingE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("path", outDir)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
-    val q1 = start()
+    val engineFs = ("graft.io.NioLocalFileSystem", "graft.io.NioLocalFs")
+    val stockFs = ("org.apache.hadoop.fs.LocalFileSystem", "org.apache.hadoop.fs.local.LocalFs")
+    def checkpointFs() = {
+      val conf = spark.sessionState.newHadoopConf()
+      (new org.apache.hadoop.fs.Path(ckpt).getFileSystem(conf).getClass.getName,
+        org.apache.hadoop.fs.FileContext.getFileContext(
+          new java.net.URI("file:///"), conf).getDefaultFileSystem.getClass.getName)
+    }
+    firstRun.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      mem.addData(KEv("k", 1, 10, 1.0, null, false, 0), // open the gate
-        KEv("k", 0, 20, 1.5, null, false, 1))
-      q1.processAllAvailable()
-    } finally q1.stop()
+      assert(checkpointFs() == (if (firstRun.isEmpty) engineFs else stockFs))
+      val q1 = start()
+      try {
+        mem.addData(KEv("k", 1, 10, 1.0, null, false, 0), // open the gate
+          KEv("k", 0, 20, 1.5, null, false, 1))
+        q1.processAllAvailable()
+      } finally q1.stop()
+    } finally firstRun.keys.foreach(spark.conf.unset)
+    assert(checkpointFs() == engineFs)
     // restart from the checkpoint: the open-gate state must be restored
     val q2 = start()
     try {
